@@ -2,7 +2,7 @@
 
 Prints ONE JSON line:
     {"metric": "bench_total_sec", "value": N, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": 0.1}
+     "queries": {"q": sec, ...}, "sf": 0.1, "cpus": 32, ...}
 
 Env:
     SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1)
@@ -157,6 +157,9 @@ def main() -> None:
             }
 
     total = round(sum(timings.values()), 3)
+    # the session's parallelism: ALS blocking and the pinned partition
+    # counts follow it, so every artifact records which value it ran at
+    cpus = spark.sparkContext.defaultParallelism
     # Noise self-description (VERDICT r4): popular_parts is the host
     # canary — steady ~0.72 s at sf0.1 on a quiet host (NOTES.md).
     # r3/r4 both produced bench artifacts with 1.5-5x host inflation
@@ -197,6 +200,7 @@ def main() -> None:
         "queries": timings,
         "n_queries": len(timings),
         "sf": sf,
+        "cpus": cpus,
         **noise,
     }
     # subset runs (BENCH_QUERIES) must not clobber the full-registry
@@ -212,6 +216,7 @@ def main() -> None:
                 "queries": slowest,
                 "n_queries": len(timings),
                 "sf": sf,
+                "cpus": cpus,
                 **noise,
             }
         )

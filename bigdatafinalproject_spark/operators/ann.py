@@ -134,6 +134,9 @@ def cosine_topk(
     over the bounded survivors assigns the global rank; the Q-fan-out
     interpreted fold disappears and the corpus is still never
     collected.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``).
     """
     if not (corpus.isStreaming or queries.isStreaming):
         from bigdatafinalproject_spark.operators.arrow_kernels import (
@@ -885,6 +888,9 @@ def embedding_neardup_pairs(
 
     Returns (id_a, id_b, cosine). Never materializes N²: candidates
     come from the (band, signature) equi-join.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``).
     """
     sig = lsh_signatures(corpus, id_col, vec_col, num_planes, bands, dim)
     a = sig.select(F.col(id_col).alias("id_a"), "band", "band_sig")

@@ -1637,7 +1637,11 @@ def _footer_rows(
     ``path`` may be one table dir or a list of unit dirs. A missing
     dir counts 0; any OTHER failure PROPAGATES (r9 review #3:
     coercing a transient read error to 0 would commit a negative or
-    wildly inflated appended_rows and silently wedge needs_retrain)."""
+    wildly inflated appended_rows and silently wedge needs_retrain).
+    That includes a dir that exists but holds no ``.parquet`` file:
+    every writer stages at least one (possibly 0-row) part file, even
+    for an empty batch, so an empty unit dir is a damaged unit and
+    raises ``FileNotFoundError`` instead of counting 0."""
     import pyarrow.parquet as papq
 
     dirs = [path] if isinstance(path, str) else list(path)
@@ -1645,7 +1649,13 @@ def _footer_rows(
     for d in dirs:
         if not os.path.isdir(d):
             continue
-        for f in _parquet_files(d):
+        files = _parquet_files(d)
+        if not files:
+            raise FileNotFoundError(
+                f"index table dir {d!r} exists but holds no parquet "
+                f"files: damaged unit, refusing to count it as 0 rows"
+            )
+        for f in files:
             total += papq.ParquetFile(f).metadata.num_rows
     return total
 
@@ -1659,7 +1669,10 @@ def ensure_ivf_index(
     subset: str | None = None,
     **build_params,
 ) -> str:
-    """Build the IVF index iff absent/stale; returns ``index_dir``."""
+    """Build the IVF index iff absent/stale; returns ``index_dir``.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     if index_is_current(index_dir, "ivf", fingerprint):
         # current index: opportunistically sweep dead writers'
         # stage litter (ADVICE r11 — see _sweep_dead_stages)
@@ -1743,7 +1756,10 @@ def ivf_index_append(
     and adopted by pure renames (v5.1), so a crash mid-adopt leaves a
     non-current index that is rebuilt, never served incomplete.
     Documented drift trade: centroids reflect the base distribution —
-    :func:`needs_retrain` watches the appended fraction."""
+    :func:`needs_retrain` watches the appended fraction.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     from bigdatafinalproject_spark.operators.ann import _nearest_centroids
 
     txn = _writer_txn(index_dir, batch_id, "append")
@@ -1844,7 +1860,10 @@ def ensure_pq_index(
     **build_params,
 ) -> str:
     """Build the PQ index iff absent/stale; returns ``index_dir``.
-    Same atomic tmp-build + rename install as ensure_ivf_index."""
+    Same atomic tmp-build + rename install as ensure_ivf_index.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     if index_is_current(index_dir, "pq", fingerprint):
         # current index: opportunistically sweep dead writers'
         # stage litter (ADVICE r11 — see _sweep_dead_stages)
@@ -1902,7 +1921,10 @@ def pq_index_append(
     adopted by pure renames (v5.1) — a crash mid-adopt leaves a
     non-current index (rebuilt, never served with codes-but-no-norms,
     which the ADC inner join would otherwise silently drop). Drift
-    trade as in :func:`ivf_index_append`."""
+    trade as in :func:`ivf_index_append`.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     from pyspark.sql import functions as F
 
     from bigdatafinalproject_spark.operators.ann import (
@@ -2598,7 +2620,10 @@ def ivf_index_search(
     FRACTION no longer steps down against a one-step-behind C (the
     measured regression: RECALL_SCALE ivfpq_appended 0.909→0.869 at
     sf3). needs_retrain, not the budget step-down, owns the drift
-    response; the retrain re-resolves both C and the budget."""
+    response; the retrain re-resolves both C and the budget.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     from bigdatafinalproject_spark.operators.ann import mass_schedule_for_n
 
     meta = _serving_manifest(index_dir, "ivf")
@@ -2664,7 +2689,10 @@ def pq_index_search(
     carry extra quantization error in their ADC ranks; a
     proportionally deeper exact rerank recovers what the compressed
     ranking loses, bounded by pool_cap and needs_retrain's budget.
-    Exact integer arithmetic, replayed by the maintenance oracle."""
+    Exact integer arithmetic, replayed by the maintenance oracle.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     meta = _serving_manifest(index_dir, "pq")
     params = meta.get("params", {})
     m_idx = int(params.get("m", 8))
@@ -2718,7 +2746,10 @@ def ensure_ivfpq_index(
     """Build the composed IVF+PQ index iff absent/stale — four frames
     (centroids, codebook, codes, norms; codes carry the cell id, so no
     separate postings table) under the same atomic tmp-build + rename
-    install as the other kinds. Returns ``index_dir``."""
+    install as the other kinds. Returns ``index_dir``.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     from bigdatafinalproject_spark.operators.ann import ivfpq_build_frames
 
     if index_is_current(index_dir, "ivfpq", fingerprint):
@@ -2813,7 +2844,10 @@ def ivfpq_index_search(
     ranks carry extra quantization error; a proportionally deeper
     exact rerank recovers what the compressed ranking loses, bounded
     by pool_cap and by needs_retrain's appended-fraction budget. Both
-    rules are exact integer arithmetic the oracles replay."""
+    rules are exact integer arithmetic the oracles replay.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     from bigdatafinalproject_spark.operators.ann import (
         ivfpq_search_frames,
         mass_schedule_for_n,
@@ -2882,7 +2916,10 @@ def ivfpq_index_append(
     as the other kinds: ``_applog`` CAS claim, invalidate-then-
     recommit, footer-delta row accounting, batch-id idempotence, log
     prune. Drift trade: BOTH quantizers reflect the base distribution
-    — :func:`needs_retrain` watches the appended fraction."""
+    — :func:`needs_retrain` watches the appended fraction.
+
+    Input contract: no zero vectors. Their cosine is NaN, so the Arrow
+    kernels raise ``ValueError`` (``arrow_kernels.seq_norm``)."""
     from pyspark.sql import functions as F
 
     from bigdatafinalproject_spark.operators.ann import (

@@ -216,6 +216,23 @@ def _expand_parquet(paths: list[str]) -> list[str]:
     return out
 
 
+def _capped_parquet(paths: list[str]) -> list[str]:
+    """The expanded .parquet files of ``paths``, after checking their
+    footer ``num_rows`` sum against ``_COLLECT_CAP`` — the refusal
+    happens from metadata alone, before any data is read into the
+    driver."""
+    import pyarrow.parquet as papq
+
+    files = _expand_parquet(paths)
+    n = sum(papq.ParquetFile(f).metadata.num_rows for f in files)
+    if n > _COLLECT_CAP:
+        raise ValueError(
+            f"arrow kernel small side has {n} rows "
+            f"(cap {_COLLECT_CAP}): refusing to collect a corpus"
+        )
+    return files
+
+
 def panel_from_parquet(
     paths: list[str], id_col: str, vec_col: str
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -230,14 +247,9 @@ def panel_from_parquet(
     scheduling overhead (profiled: ~8 small jobs per append)."""
     import pyarrow.parquet as papq
 
-    t = papq.ParquetDataset(_expand_parquet(paths)).read(
+    t = papq.ParquetDataset(_capped_parquet(paths)).read(
         columns=[id_col, vec_col]
     )
-    if t.num_rows > _COLLECT_CAP:
-        raise ValueError(
-            f"arrow kernel small side has {t.num_rows} rows "
-            f"(cap {_COLLECT_CAP}): refusing to collect a corpus"
-        )
     ids = t[id_col].to_numpy(zero_copy_only=False).astype(np.int64)
     mat = _list_to_mat(t[vec_col])
     if len(ids) == 0:
@@ -254,11 +266,9 @@ def codebook_from_parquet(
     matrix) dict read straight from the persisted codebook parquet."""
     import pyarrow.parquet as papq
 
-    t = papq.ParquetDataset(_expand_parquet(paths)).read(
+    t = papq.ParquetDataset(_capped_parquet(paths)).read(
         columns=["s", "code", "_cw"]
     )
-    if t.num_rows > _COLLECT_CAP:
-        raise ValueError("arrow kernel codebook over cap")
     ss = t["s"].to_numpy(zero_copy_only=False).astype(np.int64)
     codes = t["code"].to_numpy(zero_copy_only=False).astype(np.int64)
     mat = _list_to_mat(t["_cw"])

@@ -49,7 +49,12 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     pairs are generated within the row (bounded: TPC-H orders hold
     <= 7 lineitems), and the final distinct is unchanged. Plan: 2
     exchanges (groupBy orderkey, distinct) instead of 4 (distinct
-    items, two join re-shuffles, distinct) and no SortMergeJoin."""
+    items, two join re-shuffles, distinct) and no SortMergeJoin.
+
+    Input contract (not guarded): few distinct parts per order
+    (TPC-H: at most 7). An order with n distinct parts is one array
+    row whose O(n²) pairs are generated in a single task, so one hot
+    order on a skewed input puts all of its quadratic work there."""
     sets = lineitem.groupBy("l_orderkey").agg(
         F.collect_set("l_partkey").alias("_ps")
     )

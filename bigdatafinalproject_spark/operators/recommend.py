@@ -19,6 +19,31 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
+def als_estimator(spark, **params):
+    """MLlib ALS with the reference's parameterization style
+    (nonnegative, coldStartStrategy='drop' — ALS_model3.py:230-239),
+    blocked at the session's parallelism.
+
+    MLlib's DataFrame API defaults to a fixed 10 user × 10 item
+    blocks, which makes 10-task training stages and a 100-task
+    serving cross-join whatever the cluster size. Here both block
+    counts are ``defaultParallelism``: the rule ``layout.pin`` uses,
+    and the floor of MLlib's own RDD-API auto setting (``blocks=-1``
+    → max(defaultParallelism, partitions / 2)). Factor initialisation
+    is seeded per block, so models trained at different parallelism
+    are not bit-identical (same fit, different floats)."""
+    from pyspark.ml.recommendation import ALS
+
+    blocks = spark.sparkContext.defaultParallelism
+    return ALS(
+        numUserBlocks=blocks,
+        numItemBlocks=blocks,
+        nonnegative=True,
+        coldStartStrategy="drop",
+        **params,
+    )
+
+
 def train_als(
     ratings: DataFrame,
     user_col: str = "userId",
@@ -29,11 +54,9 @@ def train_als(
     max_iter: int = 5,
     seed: int = 42,
 ):
-    """MLlib ALS with the reference's parameterization style
-    (nonnegative, coldStartStrategy='drop' — ALS_model3.py:230-239)."""
-    from pyspark.ml.recommendation import ALS
-
-    als = ALS(
+    """Fit :func:`als_estimator` on ``ratings``."""
+    als = als_estimator(
+        ratings.sparkSession,
         userCol=user_col,
         itemCol=item_col,
         ratingCol=rating_col,
@@ -41,8 +64,6 @@ def train_als(
         regParam=reg_param,
         maxIter=max_iter,
         seed=seed,
-        nonnegative=True,
-        coldStartStrategy="drop",
     )
     return als.fit(ratings)
 

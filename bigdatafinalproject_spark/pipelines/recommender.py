@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from bigdatafinalproject_spark.operators.ids import dense_ids, with_surrogate_key
 from bigdatafinalproject_spark.operators.recommend import (
+    als_estimator,
     als_topk_flat,
     assemble_topn,
     auc,
@@ -147,17 +148,15 @@ def grid_search(
     downstream, ALS_model3.py:218 — a documented bug we do not copy),
     callers are expected to USE the winner."""
     from pyspark.ml.evaluation import RegressionEvaluator
-    from pyspark.ml.recommendation import ALS
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    als = ALS(
+    als = als_estimator(
+        ratings.sparkSession,
         userCol="userId",
         itemCol="itemId",
         ratingCol="rating",
         maxIter=max_iter,
         seed=seed,
-        nonnegative=True,
-        coldStartStrategy="drop",
     )
     grid = (
         ParamGridBuilder()

@@ -2914,3 +2914,84 @@ def test_repeated_minor_compacts_bound_unit_count(spark, tmp_path):
         for r in pq_index_search(spark, twin, emb, queries, k=5).collect()
     }
     assert a == b_ and len(a) > 0
+
+
+def _empty_batch_index(spark, tmp_path, kind):
+    """A small committed index of ``kind`` plus its append function."""
+    from bigdatafinalproject_spark.operators import ann_index as ai
+
+    if kind == "dedup":
+        docs = load_table(spark, SF_DIR, "documents")
+        idx = str(tmp_path / "dedup_empty")
+        ai.ensure_dedup_index(
+            spark, docs.filter(F.col("doc_id") % 3 != 0), idx, "fp",
+            text_col="text", id_col="doc_id", n=8, num_hashes=16, bands=4,
+        )
+        return idx, docs, ai.dedup_index_append
+    emb = load_table(spark, SF_DIR, "embeddings")
+    params = {
+        "ivf": _PARAMS,
+        "pq": _pq_params(),
+        "ivfpq": dict(
+            centroid_mod=37, max_centroids=64, train_rounds=1,
+            multi_assign=3, m=16, dim=64, codeword_mod=13, max_codewords=64,
+        ),
+    }[kind]
+    idx = str(tmp_path / f"{kind}_empty")
+    fp = corpus_fingerprint(table_path(SF_DIR, "embeddings"), **params)
+    getattr(ai, f"ensure_{kind}_index")(
+        spark, emb.filter(F.col("vec_id") % 3 != 0), idx, fp, **params
+    )
+    return idx, emb, getattr(ai, f"{kind}_index_append")
+
+
+@pytest.mark.parametrize("kind", ["ivf", "pq", "ivfpq", "dedup"])
+def test_empty_batch_stages_a_part_file_per_table(
+    spark, tmp_path, monkeypatch, kind
+):
+    """An empty delta batch still stages at least one (0-row) parquet
+    file in every table it appends. This is what lets ``_footer_rows``
+    refuse an existing dir with no parquet files without breaking the
+    empty-batch append path (``_append_sizes`` stages an empty
+    partial-count table for the same reason)."""
+    import json
+
+    from bigdatafinalproject_spark.operators import ann_index as ai
+
+    idx, frame, append = _empty_batch_index(spark, tmp_path, kind)
+    staged: dict[str, tuple[int, int]] = {}
+    finish = ai._finish_append
+
+    def spy(index_dir, stage, tables, *a, **k):
+        for t in tables:
+            d = os.path.join(stage, t)
+            staged[t] = (len(ai._parquet_files(d)), ai._footer_rows(spark, d))
+        return finish(index_dir, stage, tables, *a, **k)
+
+    monkeypatch.setattr(ai, "_finish_append", spy)
+    append(spark, idx, frame.limit(0), batch_id=1)
+    # every staged table: >= 1 part file, 0 rows in total
+    assert staged and all(n >= 1 and rows == 0 for n, rows in staged.values()), staged
+    meta = json.load(open(os.path.join(idx, "_meta.json")))
+    assert meta["applied_batches"] == [1]
+
+
+def test_footer_rows_refuses_emptied_unit_dir(spark, tmp_path):
+    """Only a MISSING dir counts 0 rows. A unit dir that exists but
+    lost its parquet files is damaged, and counting it as 0 would
+    commit a wrong appended_rows, so ``_footer_rows`` raises."""
+    from bigdatafinalproject_spark.operators.ann_index import (
+        _footer_rows,
+        _manifest,
+        _parquet_files,
+        _unit_paths,
+    )
+
+    emb, base, delta, idx = _build_pq_base(spark, tmp_path, "pq_emptied")
+    units = _unit_paths(idx, _manifest(idx), "norms")
+    assert _footer_rows(spark, units) == base.count()
+    assert _footer_rows(spark, units + [str(tmp_path / "absent")]) == base.count()
+    for f in _parquet_files(units[0]):
+        os.remove(f)
+    with pytest.raises(FileNotFoundError, match="holds no parquet files"):
+        _footer_rows(spark, units)

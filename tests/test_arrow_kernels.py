@@ -353,3 +353,38 @@ def test_quantized_scan_arrow_matches_crossjoin_fold(spark, rng):
         .select("query_id", "neighbor_id")
     )
     assert _sorted_rows(got) == _sorted_rows(ref)
+
+
+def test_panel_reads_refuse_over_cap_from_footers(tmp_path, monkeypatch):
+    """The driver-side panel readers check ``_COLLECT_CAP`` against the
+    footer row counts BEFORE any data is read: an oversized table is
+    refused without ever materializing it on the driver."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    panel, book = tmp_path / "panel", tmp_path / "book"
+    panel.mkdir()
+    book.mkdir()
+    vecs = pa.array([[1.0, 2.0]] * 10, pa.list_(pa.float64()))
+    ids = pa.array(range(10), pa.int64())
+    papq.write_table(pa.table({"id": ids, "v": vecs}), panel / "part-0.parquet")
+    papq.write_table(
+        pa.table({"s": pa.array([0] * 10, pa.int64()), "code": ids, "_cw": vecs}),
+        book / "part-0.parquet",
+    )
+
+    def _no_read(*a, **k):
+        raise AssertionError("data read before the cap check")
+
+    monkeypatch.setattr(AK, "_COLLECT_CAP", 9)
+    with monkeypatch.context() as m:
+        m.setattr(papq, "ParquetDataset", _no_read)
+        with pytest.raises(ValueError, match=r"10 rows \(cap 9\)"):
+            AK.panel_from_parquet([str(panel)], "id", "v")
+        with pytest.raises(ValueError, match=r"10 rows \(cap 9\)"):
+            AK.codebook_from_parquet([str(book)], m=1)
+    # at the cap both read normally
+    monkeypatch.setattr(AK, "_COLLECT_CAP", 10)
+    got_ids, mat = AK.panel_from_parquet([str(panel)], "id", "v")
+    assert got_ids.tolist() == list(range(10)) and mat.shape == (10, 2)
+    assert AK.codebook_from_parquet([str(book)], m=1)[0][0].tolist() == list(range(10))
