@@ -38,47 +38,7 @@ def main() -> None:
     names = subset.split(",") if subset else sorted(registry.QUERIES)
 
     spark = get_spark(app_name="bdfp-bench")
-    # warm the JVM + parquet footers so per-query numbers measure the query
-    registry.QUERIES["popular_parts"](spark, sf_dir).count()
-    # ship the package zip BEFORE warming the worker pool: addPyFile
-    # changes the Python-worker-factory key, so a pool warmed first
-    # would be abandoned and re-forked at the first kernelized query
-    # (~2-4 s of numpy/pyarrow imports charged to that query)
-    from bigdatafinalproject_spark.operators import arrow_kernels as _ak
-
-    _ak.ensure_shipped(spark)
-    # warm the Python worker pool too — otherwise the alphabetically
-    # first mapInPandas query absorbs the whole pool's spin-up cost
-    spark.range(10_000).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # ... and make that warm-up import the Arrow kernel module (numpy +
-    # pyarrow + the kernels) in every pooled worker: the r14 ANN/dedup
-    # plans run operators/arrow_kernels kernels, and a cold worker pays
-    # ~0.5-1 s of module import that would otherwise be charged to the
-    # first kernelized query (same principle as the two warms above)
-    def _warm_kernels(it):
-        _ak.seq_dot  # resolved in the worker: the module is imported
-        yield from it
-
-    spark.range(10_000).repartition(32).mapInArrow(
-        _warm_kernels, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # same principle for the Python DataSource worker kind (separate
-    # from the pandas pool): first use costs ~3 s of interpreter
-    # spin-up that would otherwise be charged to python_datasource_agg
-    from bigdatafinalproject_spark.sources.pydatasource import register
-
-    register(spark)
-    (
-        spark.read.format("bdfp_series")
-        .option("n", 64)
-        .option("parts", 8)
-        .load()
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    warm_session(spark, sf_dir)
 
     # Per-query noise guard (VERDICT r5): a single-query spike can slip
     # past the whole-run canary (BENCH_r05 carried price_band_join at
@@ -220,6 +180,51 @@ def main() -> None:
                 **noise,
             }
         )
+    )
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Warm the JVM, the parquet footers and each Python worker kind,
+    so per-query timings measure the query and not first-use spin-up."""
+    registry.QUERIES["popular_parts"](spark, sf_dir).count()
+    # ship the package zip BEFORE warming the worker pool: addPyFile
+    # changes the Python-worker-factory key, so a pool warmed first
+    # would be abandoned and re-forked at the first kernelized query
+    # (~2-4 s of numpy/pyarrow imports charged to that query)
+    from bigdatafinalproject_spark.operators import arrow_kernels as _ak
+
+    _ak.ensure_shipped(spark)
+    # warm the Python worker pool too — otherwise the alphabetically
+    # first mapInPandas query absorbs the whole pool's spin-up cost
+    spark.range(10_000).repartition(32).mapInPandas(
+        lambda it: it, "id long"
+    ).write.format("noop").mode("overwrite").save()
+    # ... and make that warm-up import the Arrow kernel module (numpy +
+    # pyarrow + the kernels) in every pooled worker: the r14 ANN/dedup
+    # plans run operators/arrow_kernels kernels, and a cold worker pays
+    # ~0.5-1 s of module import that would otherwise be charged to the
+    # first kernelized query (same principle as the two warms above)
+    def _warm_kernels(it):
+        _ak.seq_dot  # resolved in the worker: the module is imported
+        yield from it
+
+    spark.range(10_000).repartition(32).mapInArrow(
+        _warm_kernels, "id long"
+    ).write.format("noop").mode("overwrite").save()
+    # same principle for the Python DataSource worker kind (separate
+    # from the pandas pool): first use costs ~3 s of interpreter
+    # spin-up that would otherwise be charged to python_datasource_agg
+    from bigdatafinalproject_spark.sources.pydatasource import register
+
+    register(spark)
+    (
+        spark.read.format("bdfp_series")
+        .option("n", 64)
+        .option("parts", 8)
+        .load()
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
 
 

@@ -4,17 +4,22 @@ dense-matrix sklearn cosine, similarity_matrix.py:41-47).
 
 Two tiers:
 
-- ``cosine_topk``  — exact brute force: Q×N cosine via JVM-side
-  ``zip_with``/``aggregate`` (no Python in the loop), windowed top-k.
-  The correctness baseline; cost O(Q·N·d).
+- ``cosine_topk``  — exact brute force: Q×N cosine in an Arrow kernel
+  (operators/arrow_kernels.py), windowed top-k. The correctness
+  baseline; cost O(Q·N·d).
 - ``lsh_topk``     — random-hyperplane LSH: P deterministic pseudo-random
   hyperplanes → sign bits → banded bucket equi-join → exact cosine only
   on candidates. The 100 TB path: never materializes Q×N.
 
-Determinism/portability: dot products are LEFT-TO-RIGHT sequential
-double folds over the array (Spark ``aggregate`` == DuckDB
-``list_reduce``), so results are bit-identical across engines without
+Determinism/portability: dot products accumulate LEFT-TO-RIGHT in
+double, reproducing the sequential fold DuckDB's ``list_reduce`` runs
+in the oracles, so results are bit-identical across engines without
 decimal rounding; hyperplane components are md5-derived integers.
+
+The kernel-backed operators here are batch-only: each refuses a
+streaming frame with ``arrow_kernels.require_batch``'s ``ValueError``
+(streaming pipelines call them on ``foreachBatch``'s batch frames).
+``lsh_signatures`` is the one operator with a streaming form.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.operators.layout import spread
+from bigdatafinalproject_spark.operators.layout import spread, spread_scaled
 
 
 # IVFPQ adaptive probe policy (r10 introduced the mass budget; r11
@@ -98,20 +103,6 @@ IVF_SCALE_REF = 2000  # sf0.1's corpus size: s=1 there by construction
 IVF_CENTROID_CAP = 512
 
 
-def _dot(a: str, b: str) -> Column:
-    """Sequential double dot product of two float arrays (exact
-    float->double element casts, left-to-right accumulation)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> "
-        f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("_norm", F.sqrt(_dot(vec_col, vec_col)))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -122,54 +113,28 @@ def cosine_topk(
     """Exact top-k by cosine for each query vector.
 
     Returns (query_id, neighbor_id, cosine, rank), excluding self-pairs.
-    Ties broken by neighbor id. The corpus side is the big side; the
-    query side is broadcast (typical ANN batch: few queries, huge
-    corpus), so the cross join is a broadcast-nested-loop with no
-    shuffle of the corpus.
+    Ties broken by neighbor id. The corpus side is the big side and the
+    query side is small (typical ANN batch: few queries, huge corpus).
 
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.cosine_topk_arrow): the panel — the side
-    this plan broadcast — is collected once, each corpus partition
-    computes its local top-k per query in numpy, and a final window
-    over the bounded survivors assigns the global rank; the Q-fan-out
-    interpreted fold disappears and the corpus is still never
-    collected.
+    Runs in the Arrow kernel (operators/arrow_kernels.cosine_topk_arrow):
+    the query panel is collected once, each corpus partition computes
+    its local top-k per query in numpy, and a final window over the
+    bounded survivors assigns the global rank; the corpus is never
+    collected. Batch frames only: a streaming input raises
+    ``ValueError``.
 
     Input contract: no zero vectors. Their cosine is NaN, so the Arrow
     kernels raise ``ValueError`` (``arrow_kernels.seq_norm``).
     """
-    if not (corpus.isStreaming or queries.isStreaming):
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            cosine_topk_arrow,
-        )
-
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        return cosine_topk_arrow(
-            spread_scaled(corpus, id_col), queries, id_col, vec_col, k
-        )
-    q = with_norm(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        "_qv",
-    ).withColumnRenamed("_norm", "_qnorm")
-    c = with_norm(
-        spread(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-            ),
-            "neighbor_id",
-        ),
-        "_cv",
-    ).withColumnRenamed("_norm", "_cnorm")
-
-    cos = _dot("_qv", "_cv") / (F.col("_qnorm") * F.col("_cnorm"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
+    from bigdatafinalproject_spark.operators.arrow_kernels import (
+        cosine_topk_arrow,
+        require_batch,
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+    require_batch("cosine_topk", corpus, queries)
+    return cosine_topk_arrow(
+        spread_scaled(corpus, id_col), queries, id_col, vec_col, k
+    )
 
 
 def lsh_signatures(
@@ -400,41 +365,6 @@ def ivf_topk(
     )
 
 
-# candidate-tail pin modes (r15, VERDICT r14 #3): the per-shape
-# winners of the interleaved A/B (scripts/ab_cand_pin.py, 4 reps,
-# arms alternating per rep; medians at sf0.1):
-#   doc_embedding_neardup  none 2.47 / repartition 2.81 / scaled 2.14
-#   ann_ivf_recall         none 7.81 / repartition 7.15 / scaled 6.57
-#   ann_ivf_topk           none 4.32 / repartition 4.49 / scaled 4.44
-# "scaled" (plan-stats-derived partition count) wins or ties both
-# shapes — it pins the fan-out like r14's repartition but sizes it to
-# the data, probe-free. One hook so the experiment and production run
-# the same code path.
-_IVF_CAND_PIN = "scaled"
-_NEARDUP_CAND_PIN = "scaled"
-
-
-def _pin_candidates(
-    cand: DataFrame, key: str, mode: str = "none"
-) -> DataFrame:
-    """Parallelism pin for a shuffle-rooted candidate frame about to
-    feed vector-attach joins + an Arrow pair kernel. ``mode``:
-    ``"none"`` trusts AQE's byte-based coalescing, ``"repartition"``
-    pins the fan-out to defaultParallelism (probe-free — byte-light
-    but compute-heavy pair sets get coalesced to a handful of tasks
-    otherwise), ``"scaled"`` repartitions to the plan-stats-derived
-    count (layout.spread_scaled)."""
-    if mode == "repartition":
-        return cand.repartition(
-            cand.sparkSession.sparkContext.defaultParallelism, F.col(key)
-        )
-    if mode == "scaled":
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        return spread_scaled(cand, key)
-    return cand
-
-
 def _nearest_centroids(
     centroids: DataFrame,
     df: DataFrame,
@@ -446,58 +376,34 @@ def _nearest_centroids(
     spread_input: bool = True,
     panel: tuple | None = None,
 ) -> DataFrame:
-    """Top-``n`` centroids per vector by cosine (broadcast centroids,
-    bounded window) — the assign (n=multi) and probe (n=nprobe) legs
-    of the IVF plans. ``spread_input=False`` (r14) skips the respread
-    for bounded probe panels, where 32-way repartitioning ~40 rows
-    costs more than the kernel pass itself. ``keep_rank`` also emits the assignment rank
-    (``_rn``) so a caller needing BOTH the multi-assignment and the
-    primary (rank-1) assignment runs the N×C pass once, not twice
-    (r9 review #6: the ivfpq build was paying the corpus-wide
-    crossJoin + window shuffle twice).
+    """Top-``n`` centroids per vector by cosine — the assign (n=multi)
+    and probe (n=nprobe) legs of the IVF plans. ``spread_input=False``
+    (r14) skips the respread for bounded probe panels, where 32-way
+    repartitioning ~40 rows costs more than the kernel pass itself.
+    ``keep_rank`` also emits the assignment rank (``_rn``) so a caller
+    needing BOTH the multi-assignment and the primary (rank-1)
+    assignment runs the N×C pass once, not twice (r9 review #6).
 
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.topn_centroids_arrow): identical
-    dim-sequential cosine and (cos DESC, cid ASC) tie order,
-    vectorized in numpy, centroids collected once (bounded — the rows
-    this plan broadcast); the crossJoin fan-out and the row_number
-    shuffle disappear. ``panel`` (r15) is an optional pre-built
-    (ids asc, matrix) centroid panel — the persisted-index append
-    paths read the frozen quantizer driver-side from its parquet
+    Runs in the Arrow kernel (operators/arrow_kernels.topn_centroids_arrow):
+    dim-sequential cosine and (cos DESC, cid ASC) tie order in numpy,
+    centroids collected once (bounded). Batch frames only: a streaming
+    input raises ``ValueError``. ``panel`` (r15) is an optional
+    pre-built (ids asc, matrix) centroid panel — the persisted-index
+    append paths read the frozen quantizer driver-side from its parquet
     (arrow_kernels.panel_from_parquet), skipping the per-micro-batch
     collect job; content is bit-identical either way."""
-    if not (df.isStreaming or centroids.isStreaming):
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            topn_centroids_arrow,
-        )
-
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
-        return topn_centroids_arrow(
-            spread_scaled(src, out) if spread_input else src,
-            panel if panel is not None else centroids,
-            out, "_v", n, out,
-            keep_rank=keep_rank,
-        )
-    v = with_norm(
-        spread(
-            df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v")),
-            out,
-        ),
-        "_v",
-    ).withColumnRenamed("_norm", "_vn")
-    cn = with_norm(centroids, "_cent").withColumnRenamed("_norm", "_cn")
-    cos = _dot("_v", "_cent") / (F.col("_vn") * F.col("_cn"))
-    w = W.partitionBy(out).orderBy(
-        F.col("_cos").desc(), F.col("centroid_id").asc()
+    from bigdatafinalproject_spark.operators.arrow_kernels import (
+        require_batch,
+        topn_centroids_arrow,
     )
-    return (
-        v.crossJoin(F.broadcast(cn))
-        .withColumn("_cos", cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n)
-        .select(out, "centroid_id", *(["_rn"] if keep_rank else []))
+
+    require_batch("_nearest_centroids", df, centroids)
+    src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
+    return topn_centroids_arrow(
+        spread_scaled(src, out) if spread_input else src,
+        panel if panel is not None else centroids,
+        out, "_v", n, out,
+        keep_rank=keep_rank,
     )
 
 
@@ -839,18 +745,13 @@ def ivf_search_frames(
             mass_multi=mass_multi, sched_ref=sched_ref,
             panel=centroid_panel,
         )
-    # no spread pin here (r14): spread's partition probe materializes
-    # this shuffle-rooted subtree as a throwaway job under AQE, and the
-    # downstream consumer is now a cheap Arrow kernel — AQE's byte-based
-    # coalescing sizes the distinct output correctly at every scale
-    # (r15: re-measured with the interleaved A/B — see _pin_candidates)
-    cand = _pin_candidates(
+    # respread: AQE coalesces this byte-light, kernel-heavy pair set too far
+    cand = spread_scaled(
         probes.join(postings, on="centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct(),
         "query_id",
-        mode=_IVF_CAND_PIN,
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
@@ -901,15 +802,8 @@ def embedding_neardup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # probe-free parallelism pin (r14): the per-pair dot is now an
-    # Arrow kernel (cheap), but attaching two 64-dim vectors to every
-    # candidate pair is byte-heavy relative to the pair set AQE sizes
-    # by — coalesced to one task, the join + Arrow conversion
-    # serializes. An unconditional repartition pins the fan-out
-    # without spread's partition probe (which materializes this
-    # shuffle-rooted subtree as a throwaway job under AQE).
-    # (r15: re-measured with the interleaved A/B — see _pin_candidates)
-    cand = _pin_candidates(cand, "id_a", mode=_NEARDUP_CAND_PIN)
+    # respread: AQE coalesces this byte-light, kernel-heavy pair set too far
+    cand = spread_scaled(cand, "id_a")
     va = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     vb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     from bigdatafinalproject_spark.operators.arrow_kernels import (
@@ -1339,47 +1233,29 @@ def encode_against_codebook(
     panel: dict | None = None,
 ) -> DataFrame:
     """THE PQ encode: nearest codeword per (row, subspace) by
-    sequential-fold L2, ties to the smallest codeword id, via one
-    broadcast codebook join + one map-side-combinable ``min(struct)``
-    argmin (never a sort shuffle of the largest relation). ``frame``
+    sequential-fold L2, ties to the smallest codeword id. ``frame``
     carries ``keys`` + a ``_v`` vector column (raw vectors for plain
     PQ, residuals for IVFPQ). The ONE definition shared by every
     build and append path (r9 review #7: four verbatim copies meant a
     tie-break or cast fix could silently diverge the build/append
     halves — exactly the invariant the maintenance oracles rely on).
 
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.encode_codebook_arrow): the subspace
-    slice, dim-sequential L2 and ties-to-lowest-code argmin run
-    vectorized per partition and the explode + broadcast join +
-    min(struct) shuffle disappears. ``panel`` (r15) is an optional
-    pre-built per-subspace codebook dict
+    Runs in the Arrow kernel (operators/arrow_kernels.encode_codebook_arrow):
+    the subspace slice, dim-sequential L2 and ties-to-lowest-code
+    argmin are vectorized per partition. Batch frames only: a
+    streaming input raises ``ValueError``. ``panel`` (r15) is an
+    optional pre-built per-subspace codebook dict
     (arrow_kernels.codebook_from_parquet) — the index append paths
     read the frozen codebook driver-side, skipping the per-micro-batch
     collect job; content is bit-identical either way."""
-    if not (frame.isStreaming or cb.isStreaming):
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            encode_codebook_arrow,
-        )
-
-        return encode_codebook_arrow(
-            frame, panel if panel is not None else cb, m, dim, keys
-        )
-    spaces, subv = _pq_exprs(m, dim)
-    l2 = F.expr(
-        "aggregate(zip_with(_sv, _cw, (x, c) -> "
-        "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE)) * "
-        "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE))), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    from bigdatafinalproject_spark.operators.arrow_kernels import (
+        encode_codebook_arrow,
+        require_batch,
     )
-    return (
-        frame.select(*keys, spaces, "_v")
-        .select(*keys, "s", subv)
-        .join(F.broadcast(cb), "s")
-        .withColumn("_d", l2)
-        .groupBy(*keys, "s")
-        .agg(F.min(F.struct("_d", "code")).alias("_b"))
-        .select(*keys, "s", F.col("_b.code").alias("code"))
+
+    require_batch("encode_against_codebook", frame, cb)
+    return encode_codebook_arrow(
+        frame, panel if panel is not None else cb, m, dim, keys
     )
 
 
@@ -1664,10 +1540,7 @@ def ivfpq_build_frames(
     from bigdatafinalproject_spark.operators.arrow_kernels import (
         topn_centroids_arrow,
     )
-    from bigdatafinalproject_spark.operators.layout import (
-        scaled_parallelism,
-        spread_scaled,
-    )
+    from bigdatafinalproject_spark.operators.layout import scaled_parallelism
 
     _pt = scaled_parallelism(corpus)
     assigned = materialize_barrier(

@@ -1453,6 +1453,11 @@ def _finish_append(
     return index_dir
 
 
+# staged delta batches up to this many rows are cell-counted
+# driver-side with pyarrow; larger ones keep the Spark aggregate
+_SIZES_ARROW_ROWCAP = 4_000_000
+
+
 def _append_sizes(
     spark: SparkSession,
     cpath: str,
@@ -1478,11 +1483,10 @@ def _append_sizes(
     bench row.
 
     r15: ZERO Spark jobs for a bounded batch — when the staged files'
-    footers count at most ``BDFP_SIZES_ARROW_ROWCAP`` rows (default
-    4M, env-tunable for scale runs), the cell-id column is read and
-    value-counted driver-side with pyarrow (one int64 column of a
-    batch the driver just wrote; exact integer counts, engine-
-    independent). Larger batches keep the Spark aggregate — the cap
+    footers count at most ``_SIZES_ARROW_ROWCAP`` rows (4M), the
+    cell-id column is read and value-counted driver-side with pyarrow
+    (one int64 column of a batch the driver just wrote; exact integer
+    counts, engine-independent). Larger batches keep the Spark aggregate — the cap
     makes the fast path scale-safe, not a driver hazard. ``pred``
     accepts the equality tuple ``(col, value)`` so both paths can
     apply it (the only caller shape: ivfpq's one-row-per-vector
@@ -1493,13 +1497,12 @@ def _append_sizes(
 
     from pyspark.sql import functions as F
 
-    rowcap = int(os.environ.get("BDFP_SIZES_ARROW_ROWCAP", "4000000"))
     out: dict[int, int] = {}
     if delta_files:
         staged_rows = sum(
             papq.ParquetFile(f).metadata.num_rows for f in delta_files
         )
-        if staged_rows <= rowcap:
+        if staged_rows <= _SIZES_ARROW_ROWCAP:
             cols = [cell_col] + ([pred[0]] if pred is not None else [])
             t = papq.ParquetDataset(delta_files).read(columns=cols)
             col = t[cell_col]

@@ -36,11 +36,11 @@ rows, now materialized once instead of re-executed per plan reference.
 instead of a silent driver OOM. The big side streams through
 ``mapInArrow`` partition by partition and is never collected.
 
-Streaming frames cannot ``collect()`` mid-plan; every public entry
-point takes ``df.isStreaming`` into account at the CALLER (the callers
-fall back to the expression form there — today only lsh_signatures
-runs on an unbatched streaming frame; the index-maintenance paths all
-operate inside foreachBatch on batch frames).
+Batch-only contract: streaming frames cannot ``collect()`` mid-plan,
+so the kernel-backed operators in ann/dedup/clustering refuse them
+with :func:`require_batch`'s ``ValueError``. The index-maintenance
+paths call them inside ``foreachBatch`` on batch frames; only
+``ann.lsh_signatures`` keeps a streaming (expression) form.
 """
 
 from __future__ import annotations
@@ -106,6 +106,18 @@ def _ensure_worker_imports(df) -> None:
         sc.addPyFile(str(zpath))
         _SHIPPED.add(key)
 
+
+def require_batch(op_name: str, *frames: DataFrame) -> None:
+    """Refuse streaming input to a kernel-backed operator: its kernel
+    collects a bounded side, which a streaming plan cannot do. Call
+    the operator on the batch frames ``foreachBatch`` hands over."""
+    if any(f.isStreaming for f in frames):
+        raise ValueError(
+            f"{op_name} runs Arrow kernels on batch frames only and "
+            "cannot take a streaming frame; call it inside foreachBatch"
+        )
+
+
 # Bounded-collect guard: the largest legitimate small side is the
 # exact-tier query panel (N/50 rows — ~12k at sf30); trained
 # centroid/codebook frames are <= IVF_CENTROID_CAP / m*64 rows. A call
@@ -141,7 +153,9 @@ def seq_l2(X: np.ndarray, C: np.ndarray) -> np.ndarray:
 
 
 def seq_norm(X: np.ndarray) -> np.ndarray:
-    """Per-row sqrt(sequential self-dot) — the ``with_norm`` fold.
+    """Per-row sqrt(sequential self-dot) — the SQL vector norm: the
+    products ``double(v[i]) * double(v[i])`` summed left to right from
+    0.0 (DuckDB ``list_reduce``), then ``sqrt``.
 
     Zero-norm guard (ADVICE r14): a zero vector yields a NaN cosine,
     which Spark's DESC ordering ranks FIRST (NaN = largest double)
@@ -292,14 +306,13 @@ def topn_centroids_arrow(
     keep_rank: bool = False,
     emit_residual: bool = False,
 ) -> DataFrame:
-    """Drop-in for the crossJoin + window form of
-    ``operators.ann._nearest_centroids``: top-``n`` centroids per
-    vector by cosine (descending, ties to the ascending centroid id),
-    one Arrow kernel pass instead of a C-fan-out interpreted fold plus
-    a row_number shuffle. ``emit_residual`` additionally outputs
-    ``_rv`` = vector − assigned centroid per emitted (vector, cell)
-    pair (elementwise double subtraction of exactly-widened values —
-    the ``zip_with`` residual bit-for-bit), which lets the IVFPQ build
+    """The kernel of ``operators.ann._nearest_centroids``: top-``n``
+    centroids per vector by cosine (descending, ties to the ascending
+    centroid id) in one Arrow kernel pass. ``emit_residual``
+    additionally outputs ``_rv`` = vector − assigned centroid per
+    emitted (vector, cell) pair (elementwise double subtraction of
+    exactly-widened values — the ``zip_with`` residual bit-for-bit),
+    which lets the IVFPQ build
     skip re-joining the corpus and the centroids downstream.
     ``centroids`` may also be an already-built (ids asc, matrix)
     panel tuple (r15 — see panel_from_parquet)."""
@@ -398,15 +411,23 @@ def argmin_centroids_arrow(
     group_cols: tuple[str, ...] = (),
     carry_vec: bool = False,
 ) -> DataFrame:
-    """Drop-in for ``operators.clustering._assign``: nearest centroid
-    per vector by dim-sequential squared L2, ties to the lowest cid
-    (numpy first-occurrence argmin over cid-ascending columns ==
-    ``min(struct(dist, cid))``). With ``group_cols`` (the PQ subspace
-    index) the centroid set and the argmin are scoped per group.
+    """Nearest centroid per vector (``clustering.kmeans_assign`` and
+    the Lloyd rounds of ``kmeans_centroids``) by dim-sequential
+    squared L2, ties to the lowest cid (numpy first-occurrence argmin
+    over cid-ascending columns == ``min(struct(dist, cid))``). With
+    ``group_cols`` (the PQ subspace index) the centroid set and the
+    argmin are scoped per group.
     ``cents`` may be the already-collected driver-side dict (the
     trainer's per-round form — no extra job); ``carry_vec`` passes the
     input vector through, which lets the Lloyd means consume the
-    assignment without re-joining the corpus."""
+    assignment without re-joining the corpus. At most ONE group
+    column: the centroid panel is keyed on it alone, so a composite
+    key raises ``ValueError``."""
+    if len(group_cols) > 1:
+        raise ValueError(
+            f"argmin_centroids_arrow supports at most one group column, "
+            f"got {group_cols!r}"
+        )
     _ensure_worker_imports(emb)
     if isinstance(cents, dict):
         groups = cents
@@ -475,13 +496,11 @@ def argmin_centroids_arrow(
 def encode_codebook_arrow(
     frame: DataFrame, cb: DataFrame, m: int, dim: int, keys: list[str]
 ) -> DataFrame:
-    """Drop-in for ``operators.ann.encode_against_codebook``: the PQ
+    """The kernel of ``operators.ann.encode_against_codebook``: the PQ
     argmin encode as one kernel pass — subspace slicing, the
     dim-sequential L2 against each subspace's codewords, and the
     ties-to-lowest-code argmin all happen in numpy, emitting the
-    (keys..., s, code) rows directly. Replaces an explode + broadcast
-    join + min(struct) aggregation (one shuffle of the largest
-    relation's m-fan-out removed outright). ``cb`` may also be an
+    (keys..., s, code) rows directly. ``cb`` may also be an
     already-built per-subspace panel dict (r15 — see
     codebook_from_parquet)."""
     _ensure_worker_imports(frame)
@@ -531,8 +550,8 @@ def encode_codebook_arrow(
 def norms_arrow(
     df: DataFrame, id_col: str, vec_col: str, out: str = "_cnorm"
 ) -> DataFrame:
-    """(id, vec) -> (id, sqrt(sequential self-dot)) — the ``with_norm``
-    fold as one vectorized pass."""
+    """(id, vec) -> (id, sqrt(sequential self-dot)) — the SQL norm fold
+    of :func:`seq_norm` as one vectorized pass."""
     _ensure_worker_imports(df)
     src = df.select(id_col, vec_col)
     schema = f"{_spark_field(src, id_col)}, {out} double"
@@ -890,10 +909,11 @@ def pair_cosine_arrow(
     """Per-row cosine between two vector columns of an already-joined
     frame: dim-sequential dot and self-norms, cosine =
     dot / (sqrt(selfdot(a)) * sqrt(selfdot(b))) — the same IEEE ops in
-    the same order as ``_dot(a, b) / (_norm_a * _norm_b)`` over
-    ``with_norm`` columns, so values are bit-identical. ``keep`` lists
-    the pass-through columns; the vectors are dropped after scoring
-    (they never cross another exchange)."""
+    the same order as the SQL cosine (left-to-right dot of ``a`` and
+    ``b`` divided by the product of the two :func:`seq_norm` norms), so
+    values are bit-identical. ``keep`` lists the pass-through columns;
+    the vectors are dropped after scoring (they never cross another
+    exchange)."""
     _ensure_worker_imports(df)
     src = df.select(*keep, a_col, b_col)
     schema = ", ".join(
@@ -928,14 +948,13 @@ def cosine_topk_arrow(
     vec_col: str,
     k: int,
 ) -> DataFrame:
-    """Drop-in for the exact brute-force tier
-    (``operators.ann.cosine_topk``): the query panel — the side the
-    old plan broadcast — is collected once; each corpus partition
-    computes its LOCAL top-k per query in the kernel (any global
-    top-k row is in its partition's top-k under the same (cosine
-    DESC, neighbor ASC) order), and a final window over the
-    partitions * |Q| * k survivors assigns the global rank. The
-    corpus is never collected and never crossJoin-fanned."""
+    """The kernel of the exact brute-force tier
+    (``operators.ann.cosine_topk``): the bounded query panel is
+    collected once; each corpus partition computes its LOCAL top-k per
+    query in the kernel (any global top-k row is in its partition's
+    top-k under the same (cosine DESC, neighbor ASC) order), and a
+    final window over the partitions * |Q| * k survivors assigns the
+    global rank. The corpus is never collected."""
     from pyspark.sql import Window as W
 
     _ensure_worker_imports(corpus)

@@ -7,11 +7,11 @@ Determinism design (the whole point of this implementation):
 
 - Init is data-deterministic: the k lowest-id vectors are the seed
   centroids (no rand()).
-- Distances are sequential left-to-right double folds — the same fold
-  ``list_reduce`` performs in DuckDB, so scores are bit-identical
-  across engines (the ann_* precedent).
-- Ties in the argmin break on centroid id via a struct-min aggregate —
-  a map-side-combinable groupBy, not a window.
+- Distances accumulate left to right in double inside the Arrow
+  argmin kernel — the same fold ``list_reduce`` performs in DuckDB, so
+  scores are bit-identical across engines (the ann_* precedent).
+- Ties in the argmin break on the lowest centroid id (the oracle's
+  ``min(struct(dist, cid))``).
 - Centroid updates are decimal-accumulated means (order-independent
   sums, one final double division) — engine- and partition-portable
   where a float mean would drift with row order.
@@ -23,75 +23,10 @@ iterations; this operator is the oracle-checkable fixed-iteration twin
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdatafinalproject_spark.functions import davg
-
-
-def _sq_dist(vec: Column, cent: Column) -> Column:
-    """Sequential-fold squared L2 distance (bit-portable, see module).
-    Element casts to double BEFORE the subtract so float inputs and
-    double (trained-mean) inputs fold identically in both engines."""
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            cent,
-            lambda x, c: (x.cast("double") - c.cast("double"))
-            * (x.cast("double") - c.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _assign(
-    emb: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Nearest centroid per vector: broadcast the k centroids, struct-min
-    (dist, cid) per vector. k is small by construction, so the cross
-    join is k-fan-out map-side work, never a shuffle of the big side.
-    With ``group_cols`` (e.g. a PQ subspace index) the centroid join and
-    the argmin are scoped per group — one plan trains every group.
-
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.argmin_centroids_arrow): same
-    dim-sequential arithmetic and tie rule, vectorized in numpy
-    instead of Spark's interpreted HOF path, with the k centroids
-    collected once (bounded — the same rows this plan broadcast).
-    The kernel supports at most ONE group column
-    (collect_grouped_centroids keys on group_cols[0]); composite group
-    keys keep the expression form (ADVICE r14)."""
-    if len(group_cols) <= 1 and not (emb.isStreaming or cents.isStreaming):
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            argmin_centroids_arrow,
-        )
-
-        return argmin_centroids_arrow(emb, cents, id_col, vec_col, group_cols)
-    joined = (
-        emb.join(F.broadcast(cents), on=list(group_cols))
-        if group_cols
-        else emb.crossJoin(F.broadcast(cents))
-    )
-    d = joined.select(
-        F.col(id_col),
-        *[F.col(g) for g in group_cols],
-        F.col("cid"),
-        _sq_dist(F.col(vec_col), F.col("centroid")).alias("dist"),
-    )
-    best = d.groupBy(id_col, *group_cols).agg(
-        F.min(F.struct("dist", "cid")).alias("b")
-    )
-    return best.select(
-        F.col(id_col),
-        *[F.col(g) for g in group_cols],
-        F.col("b.cid").alias("cid"),
-        F.col("b.dist").alias("dist"),
-    )
 
 
 def kmeans_centroids(
@@ -145,20 +80,23 @@ def kmeans_centroids(
     EAGER-EXECUTION CONTRACT (ADVICE r14): the driver-stepped loop
     runs one Spark job per round AT CALL TIME — call it only when
     training should actually run, and never on a streaming-rooted
-    frame (raised below; the pre-r14 lazy form silently deferred)."""
+    frame (raises ``ValueError``; the pre-r14 lazy form silently
+    deferred). At most ONE group column: the per-round centroid panel
+    is keyed on it alone, so a composite key raises ``ValueError``."""
     import numpy as np
-
-    if emb.isStreaming or init.isStreaming:
-        raise ValueError(
-            "kmeans_centroids is eager (one Spark job per Lloyd round "
-            "at call time) and cannot train on a streaming frame — "
-            "train on the batch corpus and freeze the centroids"
-        )
 
     from bigdatafinalproject_spark.operators.arrow_kernels import (
         argmin_centroids_arrow,
         collect_grouped_centroids,
+        require_batch,
     )
+
+    require_batch("kmeans_centroids", emb, init)
+    if len(group_cols) > 1:
+        raise ValueError(
+            f"kmeans_centroids supports at most one group column, got "
+            f"{group_cols!r}"
+        )
 
     from bigdatafinalproject_spark.operators.layout import (
         scaled_parallelism,
@@ -222,13 +160,23 @@ def kmeans_assign(
 ) -> DataFrame:
     """Fixed-iteration Lloyd k-means: deterministic seed centroids, then
     ``update_rounds`` x (assign -> decimal-mean update), then a final
-    assignment. Returns (id, cid, dist) against the final centroids."""
+    assignment. Returns (id, cid, dist) against the final centroids.
+
+    The final assignment runs in the Arrow kernel
+    (operators/arrow_kernels.argmin_centroids_arrow): dim-sequential
+    squared L2, ties to the lowest cid. Batch frames only: a streaming
+    input raises ``ValueError``."""
+    from bigdatafinalproject_spark.operators.arrow_kernels import (
+        argmin_centroids_arrow,
+        require_batch,
+    )
     from bigdatafinalproject_spark.operators.layout import spread
 
+    require_batch("kmeans_assign", emb)
     emb = spread(emb, id_col)
     init = emb.filter(F.col(id_col) < k).select(
         F.col(id_col).alias("cid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("centroid"),
     )
     cents = kmeans_centroids(emb, init, update_rounds, id_col, vec_col)
-    return _assign(emb, cents, id_col, vec_col)
+    return argmin_centroids_arrow(emb, cents, id_col, vec_col)

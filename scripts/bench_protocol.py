@@ -53,10 +53,12 @@ def parse_bench_stdout(stdout: str) -> dict:
     )
 
 
-def run_once(queries: list[str]) -> dict:
+def run_once(queries: list[str], repo: Path = REPO) -> dict:
+    """One fresh ``bench.py`` process of checkout ``repo`` over
+    ``queries``; returns its parsed JSON line."""
     env = dict(os.environ, BENCH_QUERIES=",".join(queries))
     out = subprocess.run(
-        [sys.executable, str(REPO / "bench.py")],
+        [sys.executable, str(repo / "bench.py")],
         env=env, capture_output=True, text=True, check=True,
     )
     return parse_bench_stdout(out.stdout)

@@ -17,6 +17,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import warm_session  # noqa: E402
 from bigdatafinalproject_spark import registry  # noqa: E402
 from bigdatafinalproject_spark.session import get_spark  # noqa: E402
 
@@ -33,22 +34,7 @@ def main() -> None:
         app_name="bdfp-profile", extra_conf={"spark.ui.enabled": "true"}
     )
     sc = spark.sparkContext
-    # warm like bench.py does
-    registry.QUERIES["popular_parts"](spark, sf_dir).count()
-    from bigdatafinalproject_spark.operators import arrow_kernels as _ak
-
-    _ak.ensure_shipped(spark)
-    spark.range(10_000).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    def _warm_kernels(it):
-        _ak.seq_dot
-        yield from it
-
-    spark.range(10_000).repartition(32).mapInArrow(
-        _warm_kernels, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_session(spark, sf_dir)
 
     base = sc.uiWebUrl
     app = _get(f"{base}/api/v1/applications")[0]["id"]

@@ -928,6 +928,45 @@ def test_ivfpq_cell_sizes_maintained_not_rescanned(spark, tmp_path):
     assert maintained() == derived()  # partial counts sum exact
 
 
+def test_append_sizes_spark_aggregate_matches_arrow_count(
+    spark, tmp_path, monkeypatch
+):
+    """A staged batch over ``_SIZES_ARROW_ROWCAP`` rows is cell-counted
+    by a Spark aggregate instead of driver-side pyarrow; both paths
+    must return and stage the same counts, with and without ``pred``."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from bigdatafinalproject_spark.operators import ann_index
+
+    staged = tmp_path / "delta" / "part-00000.parquet"
+    staged.parent.mkdir()
+    papq.write_table(
+        pa.table(
+            {
+                "centroid_id": pa.array([3, 1, 3, 2, 3, 1], pa.int64()),
+                "s": pa.array([0, 0, 1, 0, 0, 1], pa.int64()),
+            }
+        ),
+        staged,
+    )
+
+    def counts(tag, pred):
+        cpath = str(tmp_path / tag)
+        out = ann_index._append_sizes(
+            spark, cpath, [str(staged)], "centroid_id", pred
+        )
+        return out, papq.read_table(cpath).to_pylist()
+
+    expected = {None: {1: 2, 2: 1, 3: 3}, ("s", 0): {1: 1, 2: 1, 3: 2}}
+    for i, pred in enumerate(expected):
+        arrow = counts(f"arrow{i}", pred)
+        with monkeypatch.context() as m:
+            m.setattr(ann_index, "_SIZES_ARROW_ROWCAP", 0)
+            assert counts(f"spark{i}", pred) == arrow
+        assert arrow[0] == expected[pred]
+
+
 def test_ivf_cell_sizes_maintained_not_rescanned(spark, tmp_path):
     """v4/v5 (IVF half of the mass-probe retune): the ivf index
     persists a cell-size table at build and MAINTAINS it through

@@ -104,3 +104,27 @@ def test_pagerank_partition_invariant_under_skew(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "partial_sum" in plan, "hub-key sum must combine map-side"
+
+
+def test_over_broadcast_budget_joins_match_broadcast_joins(spark, monkeypatch):
+    """Past ``_BROADCAST_ROWS`` pagerank and BFS keep the sort-merge
+    joins; the result must equal the broadcast form's."""
+    from bigdatafinalproject_spark.operators import graph
+
+    edges = _hub_graph(spark)
+    sources = spark.createDataFrame([(5,)], "node bigint")
+
+    def run():
+        pr = {
+            r.node: r.pr
+            for r in graph.pagerank_fixed_point(edges, iters=2).collect()
+        }
+        bfs = sorted(
+            tuple(r) for r in graph.bfs_distances(edges, sources, 2).collect()
+        )
+        return pr, bfs
+
+    default = run()
+    monkeypatch.setattr(graph, "_BROADCAST_ROWS", 0)
+    assert run() == default
+    assert len(default[0]) == H + 1 and len(default[1]) == H + 1
